@@ -16,6 +16,8 @@ validation is plan-based, not substring-based.
 from __future__ import annotations
 
 import hashlib
+import logging
+import threading
 import time
 from collections import OrderedDict
 from dataclasses import dataclass, field
@@ -28,6 +30,8 @@ from .functions.serialization import serialize_rows
 from .plans.planner import Planner
 from .plans.validator import SqlValidationError, validate_select
 from .sources.catalog import inspect_table
+
+_LOG = logging.getLogger(__name__)
 
 #: Reference cache policy (datafabric/settings.py:93-103, core/views.py:26-42).
 CACHE_TTL_SECONDS = 300
@@ -59,12 +63,18 @@ class QueryLogEntry:
 
 class TTLCache:
     """md5-keyed, TTL'd, success-only result cache with LRU-ish culling —
-    the LocMemCache semantics the reference configures (MAX_ENTRIES=1000)."""
+    the LocMemCache semantics the reference configures (MAX_ENTRIES=1000).
+
+    Thread-safe: ``api.serve`` shares one engine, and so one cache, across
+    ``ThreadingHTTPServer``'s request threads. Without the lock, a get's
+    expiry ``del`` or ``move_to_end`` racing a set's cull raises
+    ``KeyError``."""
 
     def __init__(self, ttl: float = CACHE_TTL_SECONDS, max_entries: int = CACHE_MAX_ENTRIES):
         self.ttl = ttl
         self.max_entries = max_entries
         self._store: OrderedDict[str, tuple[float, Any]] = OrderedDict()
+        self._lock = threading.Lock()
 
     @staticmethod
     def key_for(query: str) -> str:
@@ -72,25 +82,27 @@ class TTLCache:
 
     def get(self, key: str, now: float | None = None) -> Any | None:
         now = time.time() if now is None else now
-        hit = self._store.get(key)
-        if hit is None:
-            return None
-        expires, value = hit
-        if now >= expires:
-            del self._store[key]
-            return None
-        self._store.move_to_end(key)
-        return value
+        with self._lock:
+            hit = self._store.get(key)
+            if hit is None:
+                return None
+            expires, value = hit
+            if now >= expires:
+                del self._store[key]
+                return None
+            self._store.move_to_end(key)
+            return value
 
     def set(self, key: str, value: Any, now: float | None = None) -> None:
         now = time.time() if now is None else now
-        if len(self._store) >= self.max_entries:
-            # Cull a third, oldest-first (CULL_FREQUENCY=3 semantics).
-            for _ in range(max(1, self.max_entries // 3)):
-                if not self._store:
-                    break
-                self._store.popitem(last=False)
-        self._store[key] = (now + self.ttl, value)
+        with self._lock:
+            if len(self._store) >= self.max_entries:
+                # Cull a third, oldest-first (CULL_FREQUENCY=3 semantics).
+                for _ in range(max(1, self.max_entries // 3)):
+                    if not self._store:
+                        break
+                    self._store.popitem(last=False)
+            self._store[key] = (now + self.ttl, value)
 
 
 class DataFabricEngine:
@@ -166,38 +178,10 @@ class DataFabricEngine:
         start = time.time()
         sql_query: str | None = None
         try:
-            # Precedence mirrors the reference lifecycle (:379-393): the
-            # configured LLM path first, then deterministic rules — star
-            # rules (multi-table, allowlist-gated) ahead of the
-            # single-table cascade, which always answers.
-            planned = self.planner.plan_llm(user_query)
-            if planned is None and self.use_star_rules:
-                from .plans.star_planner import plan_star
-
-                star = plan_star(user_query)
-                if star is not None and not (set(star.tables) - self.tables):
-                    planned = star
-            if planned is None:
-                planned = self.planner.plan_cascade(user_query)
+            planned = self._route(user_query)
             sql_query = planned.sql
             if getattr(planned, "operator", None):
-                # Operator-routed star plan: the Spark-side answer is a
-                # library operator (LSH near-dup, ANN — algorithms SQL
-                # cannot express scalably); planned.sql holds the
-                # question's reference SQL semantics, reported for
-                # transparency (and run differentially as the oracle by
-                # the driver gate). SQL validation does not apply — no
-                # SQL executes; the operator reads only the plan's
-                # allowlisted tables, which the gate above checked.
-                from .operators.nl import run_nl_operator
-
-                df = run_nl_operator(
-                    self.spark,
-                    {n: self.spark.table(n) for n in planned.tables},
-                    planned.operator,
-                    planned.operator_args,
-                )
-                exec_result = self._execute_df(df)
+                exec_result = self._execute_df(self._operator_df(planned))
             else:
                 validated = validate_select(self.spark, sql_query, self.tables)
                 exec_result = self._execute(validated.sql)
@@ -246,6 +230,40 @@ class DataFabricEngine:
                 "row_count": 0,
                 "cached": False,
             }
+
+    def _route(self, user_query: str):
+        """The one planning route, shared by :meth:`process` and
+        :meth:`explain`. Precedence mirrors the reference lifecycle
+        (:379-393): the configured LLM path first, then deterministic
+        rules — star rules (multi-table, allowlist-gated) ahead of the
+        single-table cascade, which always answers."""
+        planned = self.planner.plan_llm(user_query)
+        if planned is None and self.use_star_rules:
+            from .plans.star_planner import plan_star
+
+            star = plan_star(user_query)
+            if star is not None and not (set(star.tables) - self.tables):
+                planned = star
+        if planned is None:
+            planned = self.planner.plan_cascade(user_query)
+        return planned
+
+    def _operator_df(self, planned):
+        """Operator-routed star plan: the Spark-side answer is a library
+        operator (LSH near-dup, ANN — algorithms SQL cannot express
+        scalably); ``planned.sql`` holds the question's reference SQL
+        semantics, reported for transparency (and run differentially as
+        the oracle by the driver gate). SQL validation does not apply — no
+        SQL executes; the operator reads only the plan's allowlisted
+        tables, which :meth:`_route` checked."""
+        from .operators.nl import run_nl_operator
+
+        return run_nl_operator(
+            self.spark,
+            {n: self.spark.table(n) for n in planned.tables},
+            planned.operator,
+            planned.operator_args,
+        )
 
     def _execute(self, sql: str) -> dict[str, Any]:
         """Execute validated SQL via Catalyst; serialize with the compat
@@ -317,7 +335,9 @@ class DataFabricEngine:
                 ).withColumn("timestamp", F.current_timestamp())
                  .write.mode("append").parquet(self.log_sink_path))
             except Exception:
-                pass  # log failures are swallowed, like the reference :376-377
+                # swallowed, like the reference :376-377, but never silently
+                _LOG.warning("query log sink append to %s failed",
+                             self.log_sink_path, exc_info=True)
 
     # -- metadata endpoints (core/views.py:65-121) ---------------------------
     def examples(self) -> dict[str, Any]:
@@ -361,24 +381,9 @@ class DataFabricEngine:
         if not user_query:
             return {"success": False, "error": "Query cannot be empty"}
         try:
-            planned = self.planner.plan_llm(user_query)
-            if planned is None and self.use_star_rules:
-                from .plans.star_planner import plan_star
-
-                star = plan_star(user_query)
-                if star is not None and not (set(star.tables) - self.tables):
-                    planned = star
-            if planned is None:
-                planned = self.planner.plan_cascade(user_query)
+            planned = self._route(user_query)
             if getattr(planned, "operator", None):
-                from .operators.nl import run_nl_operator
-
-                df = run_nl_operator(
-                    self.spark,
-                    {n: self.spark.table(n) for n in planned.tables},
-                    planned.operator,
-                    planned.operator_args,
-                )
+                df = self._operator_df(planned)
             else:
                 validated = validate_select(self.spark, planned.sql, self.tables)
                 df = self.spark.sql(validated.sql)

@@ -220,6 +220,37 @@ def sql_stable_sum(expr: str, scale: int = _SCALE) -> str:
     return f"SUM(CAST(ROUND(({expr}) * {f}) AS BIGINT)) / {f}"
 
 
+def sql_portable_sum(expr: str, integer: bool = False) -> str:
+    """Exact sum, as a DOUBLE, in SQL text that Spark and DuckDB evaluate
+    bit for bit alike — the served star planner's money reduction.
+
+    Double measures sum as micro-units,
+    ``CAST(SUM(CAST(FLOOR((x) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6``,
+    the SQL twin of :func:`micro_units` / :func:`stable_sum`: ``1e6`` is a
+    DOUBLE literal in both engines, FLOOR then the BIGINT cast recovers the
+    same integer (the true value of ``x * 1e6`` is an integer with double
+    error far below 0.5, so the shift-and-floor never meets a tie while a
+    term stays under 2^52 micro-units), Spark sums it in a long and DuckDB
+    in a HUGEINT, and the final long->double conversion and IEEE divide are
+    the same operations. Unlike ``sql_stable_sum``'s ROUND, which Spark
+    runs through a BigDecimal per row, and unlike a DECIMAL(18,6) cast,
+    whose sum widens to a BigDecimal-backed decimal(28,6) accumulator,
+    every step stays in primitive whole-stage codegen. Integer measures
+    (``integer=True``) need no encoding: ``CAST(SUM(x) AS DOUBLE)``.
+
+    Range: a group's total must stay under 2^63 micro-units (~9.2e12 value
+    units). Past it Spark's ANSI mode raises an overflow error, never a
+    wrapped total. Under :func:`set_wide_sums` the helper emits the
+    decimal(18,6) form instead (:func:`sql_stable_sum_wide`), read at
+    query-build time like every other money reduction in the engine.
+    """
+    if _WIDE_SUMS:
+        return sql_stable_sum_wide(expr)
+    if integer:
+        return f"CAST(SUM({expr}) AS DOUBLE)"
+    return f"CAST(SUM(CAST(FLOOR(({expr}) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6"
+
+
 def sql_stable_avg(expr: str, scale: int = _SCALE) -> str:
     """SQL-text twin of :func:`stable_avg` for oracle queries."""
     f = f"{float(10**scale):.1f}"

@@ -257,7 +257,7 @@ def events_funnel_conversion(spark, t):
     second scan + join fan-out was the whole gap): the single groupBy
     collects first_view as a conditional MIN and the user's purchase
     timestamps as a sorted array in the same pass; the answer is the
-    first array element past first_view (element_at(filter(...), 1), a
+    first array element past first_view (try_element_at(filter(...), 1), a
     codegen'd array probe). The one exchange carries per-user partial
     state keyed on user_id.
 
@@ -278,8 +278,11 @@ def events_funnel_conversion(spark, t):
             )
         ).alias("ps"),
     )
-    first_purchase = F.element_at(
-        F.filter("ps", lambda x: x > F.col("first_view")), 1
+    # try_element_at: a viewer with no purchase after the first view has
+    # an empty filtered array, which element_at rejects under ANSI mode
+    # (INVALID_ARRAY_INDEX_IN_ELEMENT_AT); NULL drops the user below.
+    first_purchase = F.try_element_at(
+        F.filter("ps", lambda x: x > F.col("first_view")), F.lit(1)
     )
     return (
         g.where(F.col("first_view").isNotNull())

@@ -268,8 +268,8 @@ def tpch_q5(spark, t):
         # compound key (l_orderkey, s_nationkey) == (o_orderkey,
         # c_nationkey) builds a generic UnsafeHashedRelation; packing
         # both into ONE long — orderkey * 32 + nationkey, injective
-        # because nationkey < 25 in this corpus's fixed 25-nation
-        # dimension — lets Spark build a LongHashedRelation (dense
+        # while 0 <= nationkey < 32 (this corpus's fixed 25-nation
+        # dimension) — lets Spark build a LongHashedRelation (dense
         # long-keyed, its fastest build+probe), and since no oc column
         # survives the join (oc is unique per orderkey, so inner ==
         # semi in multiplicity, and the rollup groups on the supplier
@@ -278,13 +278,21 @@ def tpch_q5(spark, t):
         # 3.71 s vs compound inner 6.93 s (-46%), packed inner 3.85 s,
         # forced shuffle 10.21 s; suppfloor 1.37 s, DuckDB 1.89 s —
         # the compound-key relation WAS the band's dominant cost.
-        j = lx.join(F.broadcast(s_asia), lx.l_suppkey == s_asia.s_suppkey)
+        # Both nation keys pass _q5_nation_slot on their (broadcast)
+        # dimension sides, so a corpus with 32+ nations fails loudly
+        # instead of joining orders to the wrong nation.
+        s_slot = s_asia.select("s_suppkey", _q5_nation_slot("s_nationkey"))
+        j = lx.join(F.broadcast(s_slot), lx.l_suppkey == s_slot.s_suppkey)
         oc_packed = oc.select(
-            (F.col("o_orderkey") * 32 + F.col("c_nationkey")).alias("ock")
+            (
+                F.col("o_orderkey") * _Q5_NATION_SLOTS
+                + _q5_nation_slot("c_nationkey")
+            ).alias("ock")
         )
         j = j.join(
             F.broadcast(oc_packed),
-            (j.l_orderkey * 32 + F.col("s_nationkey")) == oc_packed.ock,
+            (j.l_orderkey * _Q5_NATION_SLOTS + F.col("s_nationkey"))
+            == oc_packed.ock,
             "left_semi",
         )
     else:
@@ -304,6 +312,33 @@ def tpch_q5(spark, t):
     return per_nation.join(
         F.broadcast(asia_n), F.col("s_nationkey") == asia_n.n_nationkey
     ).select("n_name", (F.col("rev_micro_total") / F.lit(1e6)).alias("revenue"))
+
+
+#: Width of the low field in Q5's packed mid-band key
+#: ``orderkey * 32 + nationkey``.
+_Q5_NATION_SLOTS = 32
+
+
+def _q5_nation_slot(col: str):
+    """``col`` unchanged while it fits the packed key's low field
+    (0 <= key < 32), else an in-plan ``raise_error``: outside that range
+    the packing stops being injective, and a collision would silently
+    credit revenue to the wrong nation. Applied to the dimension sides
+    only, so it costs no extra Spark job and no fact-row work."""
+    k = F.col(col)
+    return (
+        F.when((k >= 0) & (k < _Q5_NATION_SLOTS), k)
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"tpch_q5 packed key: {col} = "),
+                    k.cast("string"),
+                    F.lit(f" is outside [0, {_Q5_NATION_SLOTS})"),
+                )
+            )
+        )
+        .alias(col)
+    )
 
 
 #: Ceiling on Q5's mid-band supplier-first broadcast of the qualifying

@@ -4,7 +4,8 @@ extension of the reference's single-table rule cascade
 top-k, in the same deterministic keyword-rule style (no LLM required).
 
 Emitted SQL is deliberately engine-portable (ANSI constructs both Spark and
-DuckDB parse identically, including the exact decimal revenue reduction) —
+DuckDB parse identically, including the exact micro-unit money reduction,
+functions/numerics.py::sql_portable_sum) —
 the test suite and the driver's oracle gate run the *same emitted string*
 on both engines and hash-compare, so the NL path itself is differentially
 verified, not just the hand-written operator library.
@@ -15,11 +16,10 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-#: The one revenue expression, shared by every rule that aggregates money —
-#: order-independent (see functions/numerics.py).
-REVENUE = (
-    "CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)"
-)
+from ..functions.numerics import sql_portable_sum
+
+#: The one revenue measure, shared by every rule that aggregates money.
+REVENUE_EXPR = "l_extendedprice * (1 - l_discount)"
 
 #: Whitespace token count, engine-portable: the number of ' '-separated
 #: fields equals count(' ') + 1, which REPLACE/LENGTH express identically on
@@ -104,11 +104,13 @@ def plan_star(question: str) -> StarPlan | None:
 
     # revenue by region / nation / segment --------------------------------
     if has("revenue", "sales volume", "turnover"):
+        # built per call, not once: sql_portable_sum reads the wide-sums switch
+        revenue = sql_portable_sum(REVENUE_EXPR)
         if has("region"):
             return StarPlan(
                 sql=(
                     "SELECT r.r_name AS region, "
-                    f"{REVENUE} AS revenue "
+                    f"{revenue} AS revenue "
                     "FROM lineitem l "
                     "JOIN orders o ON l.l_orderkey = o.o_orderkey "
                     "JOIN customer c ON o.o_custkey = c.c_custkey "
@@ -123,7 +125,7 @@ def plan_star(question: str) -> StarPlan | None:
             return StarPlan(
                 sql=(
                     "SELECT n.n_name AS nation, "
-                    f"{REVENUE} AS revenue "
+                    f"{revenue} AS revenue "
                     "FROM lineitem l "
                     "JOIN orders o ON l.l_orderkey = o.o_orderkey "
                     "JOIN customer c ON o.o_custkey = c.c_custkey "
@@ -137,7 +139,7 @@ def plan_star(question: str) -> StarPlan | None:
             return StarPlan(
                 sql=(
                     "SELECT c.c_mktsegment AS segment, "
-                    f"{REVENUE} AS revenue "
+                    f"{revenue} AS revenue "
                     "FROM lineitem l "
                     "JOIN orders o ON l.l_orderkey = o.o_orderkey "
                     "JOIN customer c ON o.o_custkey = c.c_custkey "
@@ -153,7 +155,7 @@ def plan_star(question: str) -> StarPlan | None:
         return StarPlan(
             sql=(
                 "SELECT c.c_custkey, c.c_name, "
-                "CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spent "
+                f"{sql_portable_sum('o.o_totalprice')} AS total_spent "
                 "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
                 "GROUP BY c.c_custkey, c.c_name "
                 f"ORDER BY total_spent DESC, c.c_custkey LIMIT {k}"
@@ -180,7 +182,7 @@ def plan_star(question: str) -> StarPlan | None:
             return StarPlan(
                 sql=(
                     "SELECT c.c_mktsegment AS segment, "
-                    "CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
+                    f"{sql_portable_sum('o.o_totalprice')}"
                     " / COUNT(o.o_totalprice) AS avg_order_value "
                     "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
                     "GROUP BY c.c_mktsegment"
@@ -190,7 +192,7 @@ def plan_star(question: str) -> StarPlan | None:
             )
         return StarPlan(
             sql=(
-                "SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
+                f"SELECT {sql_portable_sum('o_totalprice')}"
                 " / COUNT(o_totalprice) AS avg_order_value FROM orders"
             ),
             branch="avg_order_value",
@@ -289,8 +291,8 @@ def plan_star(question: str) -> StarPlan | None:
             return StarPlan(
                 sql=(
                     "SELECT source, COUNT(*) AS n_docs, "
-                    f"CAST(SUM(CAST({PORTABLE_TOKENS} AS DECIMAL(18,6))) "
-                    "AS DOUBLE) / COUNT(*) AS avg_tokens "
+                    f"{sql_portable_sum(PORTABLE_TOKENS, integer=True)}"
+                    " / COUNT(*) AS avg_tokens "
                     "FROM documents GROUP BY source"
                 ),
                 branch="docs_avg_tokens_by_source",
@@ -300,7 +302,7 @@ def plan_star(question: str) -> StarPlan | None:
             return StarPlan(
                 sql=(
                     "SELECT lang, COUNT(*) AS n_docs, "
-                    "CAST(SUM(CAST(n_chars AS DECIMAL(18,6))) AS DOUBLE)"
+                    f"{sql_portable_sum('n_chars', integer=True)}"
                     " / COUNT(n_chars) AS avg_chars "
                     "FROM documents GROUP BY lang"
                 ),

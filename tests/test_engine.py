@@ -102,6 +102,44 @@ def test_ttl_cache_culls_at_capacity():
     assert c.get("k9", now=1002.0) == 9
 
 
+def test_ttl_cache_thread_safe_under_contention():
+    """``api.serve`` shares one cache across request threads: 8 threads x
+    20k get+set on a small, fast-expiring cache (so expiry deletes, LRU
+    moves and culls all interleave) must raise nothing and never hold more
+    than ``max_entries``."""
+    import random
+    import sys
+    import threading
+
+    c = TTLCache(ttl=0.001, max_entries=64)
+    errors, oversize = [], []
+
+    def hammer(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for i in range(20_000):
+                c.set(f"k{rng.randrange(256)}", i)
+                c.get(f"k{rng.randrange(256)}")
+                if len(c._store) > c.max_entries:
+                    oversize.append(len(c._store))
+        except Exception as exc:  # noqa: BLE001 - the race under test
+            errors.append(exc)
+
+    threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often, so the race shows
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert not oversize, oversize[:3]
+
+
 def test_metadata_endpoints(engine):
     assert len(engine.examples()["examples"]) == 15
     assert engine.health()["status"] == "healthy"

@@ -232,3 +232,50 @@ def test_wide_mode_parity_past_long_range(spark):
         rows,
     )
     assert wide == duck
+
+
+def test_served_sum_overflow_fails_loudly_wide_answers_exactly(spark):
+    """A served group whose micro-unit total passes 2^63 (10k orders of
+    1e9 = 1e13 value units = 1e19 micro-units) must come back as an
+    overflow failure under ANSI, never as a wrapped number; with wide sums
+    on, the same question answers exactly. Runs on its own session so its
+    tiny orders/customer views never shadow the shared corpus views."""
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.engine import (
+        DataFabricEngine,
+    )
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.functions.numerics import (
+        set_wide_sums,
+    )
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    s.range(10_000).select(
+        F.col("id").alias("o_orderkey"),
+        F.lit(1).cast("bigint").alias("o_custkey"),
+        F.lit(1.0e9).alias("o_totalprice"),
+    ).createOrReplaceTempView("orders")
+    s.createDataFrame(
+        [(1, "Customer#1")], "c_custkey bigint, c_name string"
+    ).createOrReplaceTempView("customer")
+    question = "top 3 customers by total spending"
+
+    def ask():
+        eng = DataFabricEngine(
+            s, tables={"orders", "customer"}, default_table="customer",
+            llm_provider=False,
+        )
+        return eng.process(question)
+
+    out = ask()
+    assert out["success"] is False
+    assert "overflow" in out["error"].lower(), out["error"]
+    assert out["data"] == []
+    prev = set_wide_sums(True)
+    try:
+        out = ask()
+    finally:
+        set_wide_sums(prev)
+    assert out["success"] is True, out.get("error")
+    assert "DECIMAL(18,6)" in out["sql_query"]
+    # the serializer stringifies values (reference response shape)
+    assert [float(r["total_spent"]) for r in out["data"]] == [1.0e13]

@@ -289,6 +289,53 @@ def test_q5_mid_band_suppfirst(spark, monkeypatch):
     assert got == want, (got, want)
 
 
+def _q5_tables(spark, nationkey: int) -> dict:
+    """A 40-nation corpus (every nation in ASIA) with one customer, one
+    supplier and one qualifying order line, all in ``nationkey``."""
+    from pyspark.sql import functions as F
+
+    return {
+        "region": spark.createDataFrame([(0, "ASIA")], "r_regionkey int, r_name string"),
+        "nation": spark.createDataFrame(
+            [(k, f"NATION_{k}", 0) for k in range(40)],
+            "n_nationkey int, n_name string, n_regionkey int",
+        ),
+        "customer": spark.createDataFrame(
+            [(1, nationkey)], "c_custkey long, c_nationkey int"
+        ),
+        "supplier": spark.createDataFrame(
+            [(7, nationkey)], "s_suppkey long, s_nationkey int"
+        ),
+        "orders": spark.createDataFrame(
+            [(100, 1)], "o_orderkey long, o_custkey long"
+        ).withColumn(
+            "o_orderdate", F.lit("1996-06-01 00:00:00").cast("timestamp_ntz")
+        ),
+        "lineitem": spark.createDataFrame(
+            [(100, 7, 1000.0, 0.25)],
+            "l_orderkey long, l_suppkey long, l_extendedprice double,"
+            " l_discount double",
+        ),
+    }
+
+
+def test_q5_packed_key_guard_trips_past_32_nations(spark, monkeypatch):
+    """The mid band packs ``orderkey * 32 + nationkey``, injective only
+    while 0 <= nationkey < 32. A 40-nation corpus whose customer and
+    supplier sit in nation 35 must fail loudly in-plan, never join an
+    order to the wrong nation; nation 5 on the same corpus still answers."""
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
+        tpch,
+    )
+
+    # force the packed-key mid band whatever the tiny frames' estimates say
+    monkeypatch.setattr(tpch, "_q5_orders_slice_probe", lambda *a: (False, 1))
+    ok = tpch.tpch_q5.raw(spark, _q5_tables(spark, 5)).collect()
+    assert [(r.n_name, r.revenue) for r in ok] == [("NATION_5", 750.0)]
+    with pytest.raises(Exception, match=r"c_nationkey|s_nationkey"):
+        tpch.tpch_q5.raw(spark, _q5_tables(spark, 35)).collect()
+
+
 def test_q22_not_exists_is_anti_join_with_broadcast_scalar(spark):
     plan = plan_of(spark, "tpch_q22_global_sales_opportunity")
     assert "LeftAnti" in plan, plan[:2000]

@@ -9,6 +9,9 @@ import pytest
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.engine import (
     DataFabricEngine,
 )
+from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.functions.numerics import (
+    set_wide_sums,
+)
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.star_planner import (
     plan_star,
 )
@@ -16,7 +19,7 @@ from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retr
     STAR_TABLES,
     register_views,
 )
-from conftest import SF_SMOKE
+from conftest import SF_ORACLE, SF_SMOKE
 
 CASES = [
     ("What is the revenue by region?", "revenue_by_region"),
@@ -214,3 +217,60 @@ def test_engine_operator_route_blocked_without_tables(spark):
     eng = DataFabricEngine(spark, tables={"employees"}, use_star_rules=True)
     out = eng.process("Find near-duplicate document pairs")
     assert "FROM employees" in out["sql_query"]
+
+
+#: One question per branch that sums a measure (sql_portable_sum): the
+#: money branches plus the two document-length averages.
+SUM_CASES = [
+    ("What is the revenue by region?", "revenue_by_region"),
+    ("revenue per nation please", "revenue_by_nation"),
+    ("Show revenue per market segment", "revenue_by_segment"),
+    ("top 5 customers by total spending", "top_customers"),
+    ("average order value", "avg_order_value"),
+    ("Average order value by market segment", "avg_order_value_by_segment"),
+    (
+        "What is the average document length in tokens per source?",
+        "docs_avg_tokens_by_source",
+    ),
+    ("Show document counts by language", "docs_by_language"),
+]
+
+
+def test_sums_stay_off_decimal_unless_wide():
+    """Served sums run as BIGINT micro-units (primitive codegen); only the
+    engine-wide wide-sums switch brings back the decimal(18,6) form."""
+    sql_plans = [
+        p for p in (plan_star(q) for q, _ in CASES + DOC_EVENT_CASES)
+        if p.operator is None
+    ]
+    assert {p.branch for p in sql_plans} >= {b for _, b in SUM_CASES}
+    for p in sql_plans:
+        assert "DECIMAL(" not in p.sql, (p.branch, p.sql)
+    prev = set_wide_sums(True)
+    try:
+        for q, branch in SUM_CASES:
+            p = plan_star(q)
+            assert p.branch == branch and "DECIMAL(18,6)" in p.sql, p.sql
+    finally:
+        set_wide_sums(prev)
+
+
+@pytest.mark.parametrize("question,branch", SUM_CASES)
+def test_sum_branch_bitwise_equal_spark_duckdb(spark, question, branch):
+    """The emitted string is the oracle: Spark and DuckDB must return the
+    same doubles, bit for bit, at sf0.01."""
+    import duckdb
+
+    p = plan_star(question)
+    assert p.branch == branch
+    register_views(spark, SF_ORACLE)
+    got = sorted(tuple(r) for r in spark.sql(p.sql).collect())
+    con = duckdb.connect()
+    for t in p.tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_ORACLE}/{t}.parquet')"
+        )
+    want = sorted(con.execute(p.sql).fetchall())
+    con.close()
+    assert len(got) > 0
+    assert got == want

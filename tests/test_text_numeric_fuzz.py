@@ -216,3 +216,45 @@ def test_scd2_null_event_type_matches_oracle(spark):
     for u, *_ in got:
         runs_per_user[u] = runs_per_user.get(u, 0) + 1
     assert runs_per_user == {1: 3, 2: 2}
+
+
+def test_funnel_viewer_without_later_purchase_matches_oracle(spark):
+    """A viewer whose only purchase comes BEFORE the first view leaves an
+    empty filtered purchase array. ``element_at(..., 1)`` on it aborted
+    the whole query under ANSI mode (INVALID_ARRAY_INDEX_IN_ELEMENT_AT);
+    the user must simply drop out, as in the entry's DuckDB oracle."""
+    import pandas as pd
+
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.events import (
+        events_funnel_conversion,
+    )
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
+        REGISTRY,
+    )
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rows = [
+        (1, "view", "2024-01-01 10:00:00"),
+        (1, "purchase", "2024-01-01 11:00:00"),
+        (2, "purchase", "2024-01-01 09:00:00"),
+        (2, "view", "2024-01-01 10:00:00"),
+    ]
+    pdf = pd.DataFrame(rows, columns=["user_id", "event_type", "ts"])
+    pdf["ts"] = pd.to_datetime(pdf["ts"])
+    got = sorted(
+        (r.user_id, str(r.first_view), str(r.first_purchase))
+        for r in events_funnel_conversion.raw(
+            spark, {"events": spark.createDataFrame(pdf)}
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (user_id BIGINT, event_type VARCHAR, ts TIMESTAMP)"
+    )
+    con.executemany("INSERT INTO events VALUES (?, ?, ?)", rows)
+    want = sorted(
+        (r[0], str(r[1]), str(r[2]))
+        for r in con.execute(REGISTRY["events_funnel_conversion"].oracle).fetchall()
+    )
+    con.close()
+    assert got == want == [(1, "2024-01-01 10:00:00", "2024-01-01 11:00:00")]
