@@ -24,12 +24,12 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .functions.serialization import serialize_rows
 from .plans.planner import Planner
-from .plans.validator import SqlValidationError, validate_select
+from .plans.validator import validate_select
 from .sources.catalog import inspect_table
+from .sources.connectors import append_query_log
 
 _LOG = logging.getLogger(__name__)
 
@@ -204,19 +204,6 @@ class DataFabricEngine:
             response = dict(response)
             response["cached"] = False
             return response
-        except SqlValidationError as exc:
-            total = time.time() - start
-            self._log(user_query, sql_query or "", False, str(exc), total, 0)
-            return {
-                "success": False,
-                "error": f"Query processing failed: {exc}",
-                "original_query": user_query,
-                "sql_query": sql_query,
-                "data": [],
-                "columns": [],
-                "row_count": 0,
-                "cached": False,
-            }
         except Exception as exc:  # mirrors the catch-all envelope :432-445
             total = time.time() - start
             self._log(user_query, sql_query or "", False, str(exc), total, 0)
@@ -324,16 +311,11 @@ class DataFabricEngine:
         self.query_log.append(entry)
         if self.log_sink_path:
             try:
-                row = [(entry.original_query, entry.generated_sql, entry.success,
-                        entry.error_message, entry.execution_time,
-                        entry.result_count, entry.cached)]
-                (self.spark.createDataFrame(
-                    row,
-                    "original_query string, generated_sql string, success boolean, "
-                    "error_message string, execution_time double, result_count int, "
-                    "cached boolean",
-                ).withColumn("timestamp", F.current_timestamp())
-                 .write.mode("append").parquet(self.log_sink_path))
+                append_query_log(self.spark, self.log_sink_path, [(
+                    entry.original_query, entry.generated_sql, entry.success,
+                    entry.error_message, entry.execution_time,
+                    entry.result_count, entry.cached,
+                )])
             except Exception:
                 # swallowed, like the reference :376-377, but never silently
                 _LOG.warning("query log sink append to %s failed",

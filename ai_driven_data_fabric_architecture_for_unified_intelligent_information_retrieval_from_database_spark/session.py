@@ -23,6 +23,13 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "data-fabric-spark"
 
 
+def local_cores() -> int:
+    """Task threads for a local session: ``$SPARK_GRAFT_CPUS``, else the
+    host's core count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(cpus) if cpus.isdigit() else os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -31,15 +38,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster callers pass ``None`` with a pre-set master or use
-    ``spark-submit``.
+    ``master`` defaults to ``local[local_cores()]``; on a real cluster
+    callers pass ``None`` with a pre-set master or use ``spark-submit``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -57,16 +63,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def pin_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-built session.
-
-    The correctness driver constructs its own SparkSession and hands it to
-    ``queries()`` callables; these confs are the subset we rely on that can
-    be set post-construction.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark

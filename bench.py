@@ -23,6 +23,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark import (
     get_spark,
 )
+from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.session import (
+    local_cores,
+)
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
     PHASE_SPLITS as _phase_splits,
     queries,
@@ -193,16 +196,20 @@ ASYMMETRIC_CELLS = {
 #: leg wall 4:03 vs 3:11; a 0.3 s post-GC settle did NOT rescue it —
 #: the cost is the GC itself trashing JIT/cache state, not only the
 #: ContextCleaner's async unlinks). At sf0.1 the per-pass shuffle
-#: residue is kilobytes, so the nudge buys nothing there. "auto"
-#: enables it only when the source corpus exceeds 1 GiB (sf10 and up —
-#: where the disk-survival problem actually exists); "1"/"0" force.
-_GC_NUDGE_ENV = os.environ.get("SPARK_GRAFT_GC_NUDGE", "auto")
+#: residue is kilobytes, so the nudge buys nothing there: it runs only
+#: when the source corpus exceeds 1 GiB (sf10 and up — where the
+#: disk-survival problem actually exists).
 GC_NUDGE_MIN_CORPUS_BYTES = 1 << 30
+
+#: The corpus benched when $SPARK_GRAFT_SF_DIR is unset.
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
+#: Largest-table size below which a corpus runs the small-scale regime:
+#: 8 files per re-chunked table, 8 shuffle partitions, AQE off.
+SMALL_TABLE_BYTES = 64 * 1024 * 1024
 
 
 def _gc_nudge_enabled(sf_dir: str) -> bool:
-    if _GC_NUDGE_ENV in ("0", "1"):
-        return _GC_NUDGE_ENV == "1"
     total = 0
     for root, _dirs, files in os.walk(sf_dir):
         for f in files:
@@ -214,15 +221,10 @@ def _gc_nudge_enabled(sf_dir: str) -> bool:
             return True
     return total >= GC_NUDGE_MIN_CORPUS_BYTES
 
-#: Files per re-chunked table — one scan task per file, every table.
-#: Overridable for paired layout experiments (the rechunk output dir is
-#: keyed on the count, so switching never serves a stale layout).
-N_BENCH_FILES = int(os.environ.get("SPARK_GRAFT_BENCH_FILES", "32"))
-
 
 def _rechunk(sf_dir: str) -> str:
     """Ingest/layout stage: rewrite each table as a DIRECTORY of up to
-    N_BENCH_FILES parquet files (identical rows, identical schema — only
+    32 parquet files (identical rows, identical schema — only
     the physical layout changes).
 
     The driver's test files each contain a SINGLE row group, so one task
@@ -255,21 +257,17 @@ def _rechunk(sf_dir: str) -> str:
     # halves (2.2 -> 1.1 s: 16-bucket writes from 32 scan tasks produced
     # 32 x 16 splinter files). 4 files measured only ~5% better once and
     # starves the compute-bound cells' parallelism (the r04
-    # shuffle-partition A/B's finding at width 4). SPARK_GRAFT_BENCH_FILES
-    # still overrides both regimes for layout experiments.
-    n_target = N_BENCH_FILES
-    if "SPARK_GRAFT_BENCH_FILES" not in os.environ:
-        src_largest = max(
-            (
-                os.path.getsize(os.path.join(sf_dir, f))
-                for f in os.listdir(sf_dir)
-                if f.endswith(".parquet")
-                and os.path.isfile(os.path.join(sf_dir, f))
-            ),
-            default=0,
-        )
-        if src_largest < 64 * 1024 * 1024:
-            n_target = min(n_target, 8)
+    # shuffle-partition A/B's finding at width 4).
+    src_largest = max(
+        (
+            os.path.getsize(os.path.join(sf_dir, f))
+            for f in os.listdir(sf_dir)
+            if f.endswith(".parquet")
+            and os.path.isfile(os.path.join(sf_dir, f))
+        ),
+        default=0,
+    )
+    n_target = 8 if src_largest < SMALL_TABLE_BYTES else 32
 
     suffix = "" if n_target == 32 else f"_n{n_target}"
     out_dir = os.path.join(
@@ -331,6 +329,214 @@ def _warm_page_cache(sf_dir: str) -> None:
                     pass
 
 
+def _host_heap() -> str:
+    """Driver heap for the one local JVM: half the host's RAM (MemTotal),
+    leaving the rest to the JVM's off-heap buffers, the Python driver and
+    the same-process DuckDB reference pass; at most 24g, the size measured
+    at sf10-sf60, which keeps it under 32g so compressed oops survive (a 64g
+    heap measured 10x SLOWER: q1 at sf10 72 s vs 7 s)."""
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{max(1, min(24, ram_gib // 2))}g"
+
+
+def session_conf(sf_dir: str) -> dict[str, str]:
+    """The bench's Spark session regime for the corpus at ``sf_dir``, sized
+    once from its largest table. The only place these values are computed:
+    ``main()`` launches from this dict and reads its scale regime back from
+    it, and ``tools/capture_plans.py`` launches from the same dict.
+
+    Local-bench-only tuning: the re-chunked layout is a fixed number of
+    files per table, and the scan should run exactly one task per file —
+    openCostInBytes = maxPartitionBytes (both larger than any part file)
+    disables both file splitting and file combining, so every table gets
+    full-core parallelism with no empty-split dispatch overhead. A real
+    cluster keeps the defaults (its files are ~128 MB-row-group sized)."""
+
+    def _tbl_size(f: str) -> int:
+        p = os.path.join(sf_dir, f)
+        if os.path.isdir(p):
+            return sum(
+                os.path.getsize(os.path.join(p, g)) for g in os.listdir(p)
+            )
+        return os.path.getsize(p)
+
+    largest = max(
+        (_tbl_size(f) for f in os.listdir(sf_dir) if f.endswith(".parquet")),
+        default=10 * 1024 * 1024,
+    )
+    small = largest < SMALL_TABLE_BYTES
+    split = 256 * 1024 * 1024
+    # Broadcast capacity scales with executor memory; this bench runs one
+    # big-heap JVM, so dimensions that outgrow the 10 MB default (customer
+    # is ~25 MB at sf10) should still broadcast rather than force a
+    # fact-side shuffle (join_star at sf10: 36 s shuffled vs 10 s
+    # broadcast). Capped at 64 MB: the driver builds the broadcast hash
+    # relation single-threaded. Clamped so sf0.1 behavior is unchanged.
+    bcast = min(max(largest // 16, 10 * 1024 * 1024), 64 * 1024 * 1024)
+    return {
+        "spark.sql.files.maxPartitionBytes": str(split),
+        "spark.sql.files.openCostInBytes": str(split),
+        # At-scale shuffles run ONE partition per core: measured at sf10 vs
+        # 64 partitions it cut every shuffle-heavy query (join_star -21%,
+        # q5 -25%, q13 -33%, sessionize -49%) — with 32 threads in one JVM
+        # the extra waves buy no parallelism, only task dispatch and merge
+        # overhead, and AQE's coalescing does not recover the difference. A
+        # real cluster sizes this to its core count x 2-3 waves instead.
+        # Small-scale shuffles run 8 partitions: at sf0.1 every post-shuffle
+        # partition holds a few thousand rows, so task dispatch dominates —
+        # paired A/B (idle host, min-of-3, round 4) measured the
+        # shuffle-heavy subset 25% faster at 8 than 16 (q3 −35%, q5 −35%,
+        # sessionize −25%, minhash −20%); 4 bought little more and starved
+        # the quadratic ngram cell's real compute in some runs.
+        "spark.sql.shuffle.partitions": "8" if small else str(local_cores()),
+        # AQE's value is runtime re-planning of LARGE shuffles (coalescing,
+        # skew splitting, broadcast demotion); at sf0.1 every join already
+        # broadcasts and the only thing AQE adds is a stage-materialization
+        # boundary per exchange — measured 15% of the whole suite (8.42 s ->
+        # 7.20 s with it off). Scale keeps it on.
+        "spark.sql.adaptive.enabled": "false" if small else "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(bcast),
+        # All executor threads share ONE local JVM; the session default (8g)
+        # is tight past ~sf5. DuckDB's memory is equally unconstrained, so
+        # this is parity, not an advantage. SPARK_DRIVER_MEMORY is the
+        # deployment's override.
+        "spark.driver.memory": (
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_heap()
+        ),
+        # Console progress bars write \r-frames into the same stdout tail
+        # the driver parses the final JSON line from (the r07 artifact shows
+        # them eating half the 2000-char capture) — keep the bench's stdout
+        # to the two JSON lines.
+        "spark.ui.showConsoleProgress": "false",
+    }
+
+
+def pass_budget_s() -> float:
+    """Seconds after which a cell stops repeating passes (both engines)."""
+    return float(os.environ.get("SPARK_GRAFT_PASS_BUDGET_S", "20"))
+
+
+def selected_cells() -> list[str]:
+    """HEADLINE in order, minus the cells this run leaves out."""
+    def _names(var: str) -> set[str]:
+        return {s.strip() for s in os.environ.get(var, "").split(",") if s.strip()}
+
+    # Explicit opt-out for individual queries (comma-separated), used by the
+    # scale-curve runner to cap the quadratic ground-truth ops at the sf
+    # where they have already crossed below the DuckDB baseline.
+    skip = _names("SPARK_GRAFT_BENCH_SKIP")
+    # Opt-in subset (comma-separated): re-measure just the cells a code
+    # change touched — both engines, same conditions — so a curve cell
+    # can be refreshed without a full leg (the r06 stale-cell lesson).
+    only = _names("SPARK_GRAFT_BENCH_ONLY")
+    if only:
+        unknown = only - set(HEADLINE)
+        if unknown:
+            # A typo'd name would otherwise skip EVERY cell and record an
+            # empty "successful" pass (review r07).
+            raise SystemExit(
+                f"SPARK_GRAFT_BENCH_ONLY names not in HEADLINE: {sorted(unknown)}"
+            )
+        skip |= {n for n in HEADLINE if n not in only}
+    return [n for n in HEADLINE if n not in skip]
+
+
+def duckdb_reference(
+    sf_dir: str, cells: list[str], pass_budget: float
+) -> tuple[dict[str, float], dict[str, str], set[str]]:
+    """The DuckDB oracle SQL for ``cells`` on the parquet at ``sf_dir``,
+    under the same adaptive pass rule as the Spark loop. Returns the
+    per-cell best seconds, per-cell errors, and the cells whose timing
+    is a best-of-fewer partial (kept, but never put in a ratio)."""
+    import duckdb
+
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
+        oracle_sql,
+    )
+
+    duck: dict[str, float] = {}
+    duck_errors: dict[str, str] = {}
+    duck_partial: set[str] = set()
+    con = duckdb.connect()
+    try:
+        con.execute("SET timezone='UTC'")
+        for tname in (
+            "region", "nation", "customer", "supplier", "part",
+            "orders", "lineitem", "events", "documents", "embeddings",
+        ):
+            p = os.path.join(sf_dir, f"{tname}.parquet")
+            if os.path.isdir(p):
+                con.execute(
+                    f"CREATE VIEW {tname} AS"
+                    f" SELECT * FROM read_parquet('{p}/*.parquet')"
+                )
+            elif os.path.exists(p):
+                con.execute(
+                    f"CREATE VIEW {tname} AS"
+                    f" SELECT * FROM read_parquet('{p}')"
+                )
+        # Out-of-core guard: at sf60 one oracle's spill filled the disk
+        # (48 GB of temp for a 9.4 GB corpus) and the IOException killed a
+        # 50-minute leg's ENTIRE evidence. Cap DuckDB's temp so it errors
+        # before exhausting the filesystem, and record any oracle failure
+        # per-cell instead of aborting — ratio_common already counts only
+        # cells present on both sides, so a failed oracle drops its cell
+        # from the comparison transparently (disclosed in `errors`).
+        try:
+            con.execute(
+                "SET max_temp_directory_size="
+                f"'{os.environ.get('SPARK_GRAFT_DUCKDB_TEMP_CAP', '32GiB')}'"
+            )
+        except Exception as e:  # noqa: BLE001 — pre-0.10 builds lack the
+            # setting; a failed guard must not kill the leg it exists to
+            # protect (ADVICE r11). Recorded, not fatal: without the cap the
+            # loop still records per-cell oracle failures below.
+            duck_errors["_temp_cap_unsupported"] = (
+                f"{type(e).__name__}: {str(e)[:200]}"
+            )
+        osql = oracle_sql()
+        for name in cells:
+            if name not in osql:
+                continue
+            best = None
+            for i in range(6):  # same adaptive pass rule as the Spark loop
+                if i >= 3 and best >= 1.0:
+                    break
+                t0 = time.perf_counter()
+                try:
+                    con.execute(osql[name]).fetchall()
+                except Exception as e:  # noqa: BLE001 — record, don't die
+                    # A failure on pass 2+ (e.g. a transient spill past the
+                    # temp cap) does NOT discard pass 1's valid timing: keep
+                    # the pre-exception best, PUBLISHED PER-CELL ONLY — the
+                    # cell is EXCLUDED from ratio_common/_symmetric
+                    # (`duck_partial`), because a best-of-fewer cold-pass
+                    # oracle time against Spark's min-of-6 warm passes would
+                    # bias the headline ratios in Spark's favor (ADVICE r12,
+                    # refining ADVICE r11's keep-the-evidence rule).
+                    partial = (
+                        f" (partial: kept best of {i} clean pass(es)"
+                        f" = {best:.4f}s; excluded from ratio_common)"
+                        if best is not None else ""
+                    )
+                    if best is not None:
+                        duck_partial.add(name)
+                    duck_errors[name] = (
+                        f"{type(e).__name__}: {str(e)[:200]}{partial}"
+                    )
+                    print(f"# duckdb oracle failed: {name}: {e}", file=sys.stderr)
+                    break
+                el = time.perf_counter() - t0
+                best = el if best is None else min(best, el)
+                if el > pass_budget and i >= 1:
+                    break
+            if best is not None:
+                duck[name] = round(best, 4)
+    finally:
+        con.close()
+    return duck, duck_errors, duck_partial
+
+
 def main() -> None:
     # Startup hygiene: clear a SIGKILLed predecessor's token-suffixed
     # warehouse dirs (the atexit cleanup never ran for it).
@@ -341,7 +547,7 @@ def main() -> None:
     prune_stale_warehouse(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "spark-warehouse")
     )
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_dir = _rechunk(sf_dir)
@@ -355,87 +561,8 @@ def main() -> None:
     _warm_page_cache(sf_dir)
     gc_nudge = _gc_nudge_enabled(sf_dir)
     print(f"# gc_nudge={'on' if gc_nudge else 'off'}", file=sys.stderr)
-    # Local-bench-only tuning: the re-chunked layout is N_BENCH_FILES
-    # files per table, and the scan should run exactly one task per file —
-    # openCostInBytes = maxPartitionBytes (both larger than any part file)
-    # disables both file splitting and file combining, so every table gets
-    # full-core parallelism with no empty-split dispatch overhead. A real
-    # cluster keeps the defaults (its files are ~128 MB-row-group sized).
-    def _tbl_size(f: str) -> int:
-        p = os.path.join(sf_dir, f)
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(p, g)) for g in os.listdir(p)
-            )
-        return os.path.getsize(p)
-
-    largest = max(
-        (_tbl_size(f) for f in os.listdir(sf_dir) if f.endswith(".parquet")),
-        default=10 * 1024 * 1024,
-    )
-    split = 256 * 1024 * 1024
-    # Broadcast capacity scales with executor memory; this bench runs one
-    # big-heap JVM, so dimensions that outgrow the 10 MB default (customer
-    # is ~25 MB at sf10) should still broadcast rather than force a
-    # fact-side shuffle (join_star at sf10: 36 s shuffled vs 10 s
-    # broadcast). Capped at 64 MB: the driver builds the broadcast hash
-    # relation single-threaded. Clamped so sf0.1 behavior is unchanged.
-    bcast = min(max(largest // 16, 10 * 1024 * 1024), 64 * 1024 * 1024)
-    spark = get_spark(
-        app_name="fabric-bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(split),
-            "spark.sql.files.openCostInBytes": str(split),
-            # At-scale shuffles run ONE partition per core: measured at
-            # sf10 vs 64 partitions it cut every shuffle-heavy query
-            # (join_star -21%, q5 -25%, q13 -33%, sessionize -49%) — with
-            # 32 threads in one JVM the extra waves buy no parallelism,
-            # only task dispatch and merge overhead, and AQE's coalescing
-            # does not recover the difference. A real cluster sizes this
-            # to its core count x 2-3 waves instead.
-            # Small-scale shuffles run 8 partitions: at sf0.1 every
-            # post-shuffle partition holds a few thousand rows, so task
-            # dispatch dominates — paired A/B (idle host, min-of-3,
-            # round 4) measured the shuffle-heavy subset 25% faster at 8
-            # than 16 (q3 −35%, q5 −35%, sessionize −25%, minhash −20%);
-            # 4 bought little more and starved the quadratic ngram cell's
-            # real compute in some runs.
-            # Default tracks the actual host core count so "one partition
-            # per core" holds everywhere; SPARK_GRAFT_CPUS overrides.
-            "spark.sql.shuffle.partitions": (
-                "8"
-                if largest < 64 * 1024 * 1024
-                else str(
-                    int(
-                        os.environ.get(
-                            "SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)
-                        )
-                    )
-                )
-            ),
-            # AQE's value is runtime re-planning of LARGE shuffles
-            # (coalescing, skew splitting, broadcast demotion); at sf0.1
-            # every join already broadcasts and the only thing AQE adds is
-            # a stage-materialization boundary per exchange — measured 15%
-            # of the whole suite (8.42 s -> 7.20 s with it off). Scale
-            # keeps it on.
-            "spark.sql.adaptive.enabled": (
-                "false" if largest < 64 * 1024 * 1024 else "true"
-            ),
-            "spark.sql.autoBroadcastJoinThreshold": str(bcast),
-            # 32 executor threads share ONE local JVM; the session default
-            # (8g) is tight past ~sf5, but the heap must stay under 32g so
-            # compressed oops survive (a 64g heap measured 10x SLOWER:
-            # q1 at sf10 72 s vs 7 s). DuckDB's memory is equally
-            # unconstrained, so this is parity, not an advantage.
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
-            # Console progress bars write \r-frames into the same stdout
-            # tail the driver parses the final JSON line from (the r07
-            # artifact shows them eating half the 2000-char capture) —
-            # keep the bench's stdout to the two JSON lines.
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
+    conf = session_conf(sf_dir)
+    spark = get_spark(app_name="fabric-bench", extra_conf=conf)
 
     qs = queries()
     # JVM/codegen warmup on a trivial plan so the first timed query doesn't
@@ -449,7 +576,7 @@ def main() -> None:
     # a too-large corpus aborts loudly here instead of producing a wrapped
     # (ANSI-off) or failing (ANSI-on) sum mid-suite.
     wide_sums_grains: list[str] = []
-    if largest >= 64 * 1024 * 1024:
+    if conf["spark.sql.adaptive.enabled"] == "true":  # large-corpus regime
         from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.functions.numerics import (
             assert_microunit_headroom,
             set_wide_sums,
@@ -542,39 +669,13 @@ def main() -> None:
     # is ±0.1 s — decisive on sub-second queries, noise once a single pass
     # runs tens of seconds (and repeating a multi-minute quadratic
     # ground-truth query would dominate the whole bench run).
-    pass_budget = float(os.environ.get("SPARK_GRAFT_PASS_BUDGET_S", "20"))
-    # Explicit opt-out for individual queries (comma-separated), used by the
-    # scale-curve runner to cap the quadratic ground-truth ops at the sf
-    # where they have already crossed below the DuckDB baseline.
-    skip = {
-        s.strip()
-        for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",")
-        if s.strip()
-    }
-    # Opt-in subset (comma-separated): re-measure just the cells a code
-    # change touched — both engines, same conditions — so a curve cell
-    # can be refreshed without a full leg (the r06 stale-cell lesson).
-    only = {
-        s.strip()
-        for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-        if s.strip()
-    }
-    if only:
-        unknown = only - set(HEADLINE)
-        if unknown:
-            # A typo'd name would otherwise skip EVERY cell and record an
-            # empty "successful" pass (review r07).
-            raise SystemExit(
-                f"SPARK_GRAFT_BENCH_ONLY names not in HEADLINE: {sorted(unknown)}"
-            )
-        skip |= {n for n in HEADLINE if n not in only}
+    pass_budget = pass_budget_s()
+    cells = selected_cells()
     load_start = os.getloadavg()
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     untimed_construction: dict[str, float] = {}
-    for name in HEADLINE:
-        if name in skip:
-            continue
+    for name in cells:
         # Progress + failure attribution (r13): two sf30 legs died
         # mid-suite with only a stage number to go on — one line per
         # cell names the suspect immediately.
@@ -652,86 +753,9 @@ def main() -> None:
     duck_errors: dict[str, str] = {}
     duck_partial: set[str] = set()
     if os.environ.get("SPARK_GRAFT_DUCKDB_REF", "1") != "0":
-        import duckdb
-
-        from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
-            oracle_sql,
+        duck, duck_errors, duck_partial = duckdb_reference(
+            sf_dir, cells, pass_budget
         )
-
-        con = duckdb.connect()
-        con.execute("SET timezone='UTC'")
-        for tname in (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ):
-            p = os.path.join(sf_dir, f"{tname}.parquet")
-            if os.path.isdir(p):
-                con.execute(
-                    f"CREATE VIEW {tname} AS"
-                    f" SELECT * FROM read_parquet('{p}/*.parquet')"
-                )
-            elif os.path.exists(p):
-                con.execute(
-                    f"CREATE VIEW {tname} AS"
-                    f" SELECT * FROM read_parquet('{p}')"
-                )
-        # Out-of-core guard: at sf60 one oracle's spill filled the disk
-        # (48 GB of temp for a 9.4 GB corpus) and the IOException killed a
-        # 50-minute leg's ENTIRE evidence. Cap DuckDB's temp so it errors
-        # before exhausting the filesystem, and record any oracle failure
-        # per-cell instead of aborting — ratio_common already counts only
-        # cells present on both sides, so a failed oracle drops its cell
-        # from the comparison transparently (disclosed in `errors`).
-        try:
-            con.execute(
-                "SET max_temp_directory_size="
-                f"'{os.environ.get('SPARK_GRAFT_DUCKDB_TEMP_CAP', '32GiB')}'"
-            )
-        except Exception as e:  # noqa: BLE001 — pre-0.10 builds lack the
-            # setting; a failed guard must not kill the leg it exists to
-            # protect (ADVICE r11). Recorded, not fatal: without the cap the
-            # loop still records per-cell oracle failures below.
-            duck_errors["_temp_cap_unsupported"] = (
-                f"{type(e).__name__}: {str(e)[:200]}"
-            )
-        osql = oracle_sql()
-        for name in HEADLINE:
-            if name in skip or name not in osql:
-                continue
-            best = None
-            for i in range(6):  # same adaptive pass rule as the Spark loop
-                if i >= 3 and best >= 1.0:
-                    break
-                t0 = time.perf_counter()
-                try:
-                    con.execute(osql[name]).fetchall()
-                except Exception as e:  # noqa: BLE001 — record, don't die
-                    # A failure on pass 2+ (e.g. a transient spill past the
-                    # temp cap) does NOT discard pass 1's valid timing: keep
-                    # the pre-exception best, PUBLISHED PER-CELL ONLY — the
-                    # cell is EXCLUDED from ratio_common/_symmetric
-                    # (`duck_partial`), because a best-of-fewer cold-pass
-                    # oracle time against Spark's min-of-6 warm passes would
-                    # bias the headline ratios in Spark's favor (ADVICE r12,
-                    # refining ADVICE r11's keep-the-evidence rule).
-                    partial = (
-                        f" (partial: kept best of {i} clean pass(es)"
-                        f" = {best:.4f}s; excluded from ratio_common)"
-                        if best is not None else ""
-                    )
-                    if best is not None:
-                        duck_partial.add(name)
-                    duck_errors[name] = (
-                        f"{type(e).__name__}: {str(e)[:200]}{partial}"
-                    )
-                    print(f"# duckdb oracle failed: {name}: {e}", file=sys.stderr)
-                    break
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-                if el > pass_budget and i >= 1:
-                    break
-            if best is not None:
-                duck[name] = round(best, 4)
 
     total = round(sum(timings.values()), 3)
     # Partial-pass oracle cells keep their per-cell timing in `queries`

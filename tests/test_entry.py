@@ -149,3 +149,99 @@ def test_asymmetric_cells_pinned():
     }
     for name, reason in bench.ASYMMETRIC_CELLS.items():
         assert isinstance(reason, str) and len(reason) > 20, name
+
+
+def _bench():
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir))
+    import bench
+
+    return bench
+
+
+def test_session_conf_small_corpus_regime(monkeypatch):
+    """sf0.1 keeps the regime bench.py has always run it under; only the
+    heap is derived from the host, and SPARK_DRIVER_MEMORY still wins."""
+    import os
+
+    bench = _bench()
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    conf = bench.session_conf(bench.DEFAULT_SF_DIR)
+    heap = conf.pop("spark.driver.memory")
+    assert conf == {
+        "spark.sql.files.maxPartitionBytes": str(256 << 20),
+        "spark.sql.files.openCostInBytes": str(256 << 20),
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(10 << 20),
+        "spark.ui.showConsoleProgress": "false",
+    }
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert heap.endswith("g")
+    assert 1 <= int(heap[:-1]) < 32
+    assert int(heap[:-1]) << 30 <= ram
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert bench.session_conf(bench.DEFAULT_SF_DIR)["spark.driver.memory"] == "3g"
+
+
+def test_session_conf_large_corpus_regime(tmp_path, monkeypatch):
+    """Past 64 MiB in the largest table: one shuffle partition per core,
+    AQE on, and the broadcast threshold capped at 64 MiB."""
+    bench = _bench()
+    with open(tmp_path / "lineitem.parquet", "wb") as fh:
+        fh.truncate(2 << 30)  # sparse: sized, but holds no disk blocks
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    conf = bench.session_conf(str(tmp_path))
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    assert conf["spark.sql.adaptive.enabled"] == "true"
+    assert conf["spark.sql.autoBroadcastJoinThreshold"] == str(64 << 20)
+
+
+def _tool_paths():
+    import pathlib
+
+    return sorted((pathlib.Path(__file__).parent.parent / "tools").glob("*.py"))
+
+
+def test_every_tool_imports_cleanly():
+    import importlib.util
+
+    paths = _tool_paths()
+    assert paths
+    for path in paths:
+        spec = importlib.util.spec_from_file_location(f"tool_{path.stem}", path)
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+
+
+def test_tools_launch_spark_from_bench_session_conf():
+    """A tool that starts a Spark session must take its conf from
+    bench.session_conf, so it runs under the bench's regime and cannot
+    drift from it."""
+    import ast
+
+    def name(func):
+        return getattr(func, "id", None) or getattr(func, "attr", None)
+
+    def calls_session_conf(node):
+        return isinstance(node, ast.Call) and name(node.func) == "session_conf"
+
+    launching = []
+    for path in _tool_paths():
+        tree = ast.parse(path.read_text())
+        conf_names = {
+            t.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign) and calls_session_conf(node.value)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and name(node.func) == "get_spark":
+                launching.append(path.name)
+                conf = {k.arg: k.value for k in node.keywords}.get("extra_conf")
+                assert calls_session_conf(conf) or (
+                    isinstance(conf, ast.Name) and conf.id in conf_names
+                ), f"{path.name} builds its own Spark conf"
+    assert "capture_plans.py" in launching

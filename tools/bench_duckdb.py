@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""DuckDB side of the bench ratio curve: run the headline queries' oracle
-SQL (the driver's BASELINE engine) on the same re-chunked parquet bench.py
-uses, 3-pass min per query, one JSON line out.
+"""DuckDB side of the bench ratio curve on its own: bench.py's in-process
+DuckDB reference pass (``bench.duckdb_reference``: same re-chunked parquet,
+same cells, same adaptive pass rule) without the Spark suite, one JSON
+line out.
 
-Usage: python tools/bench_duckdb.py <sf_dir> [--threads N]
+Usage: python tools/bench_duckdb.py <sf_dir>
 """
 
 from __future__ import annotations
@@ -11,75 +12,30 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
-    oracle_sql,
-)
-from bench import HEADLINE, _rechunk
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+import bench
 
 
 def main() -> None:
     sf_dir = sys.argv[1]
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_dir = _rechunk(sf_dir)
+    sf_dir = bench._rechunk(sf_dir)
     # Same page-cache warm as bench.py: a cold first pass measures disk.
-    from bench import _warm_page_cache
-
-    _warm_page_cache(sf_dir)
-
-    con = duckdb.connect()
-    con.execute("SET timezone='UTC'")
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(p):  # rechunked directory-of-parts layout
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')"
-            )
-        elif os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    osql = oracle_sql()
-    # Same adaptive pass rule as bench.py: jitter-damping repeats only
-    # matter on sub-second queries.
-    pass_budget = float(os.environ.get("SPARK_GRAFT_PASS_BUDGET_S", "20"))
-    skip = {
-        s.strip()
-        for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",")
-        if s.strip()
-    }
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in osql or name in skip:
-            continue
-        best = None
-        for _ in range(3):
-            start = time.perf_counter()
-            con.execute(osql[name]).fetchall()
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
-            if elapsed > pass_budget:
-                break
-        timings[name] = round(best, 4)
-
-    total = round(sum(timings.values()), 3)
+    bench._warm_page_cache(sf_dir)
+    timings, errors, _partial = bench.duckdb_reference(
+        sf_dir, bench.selected_cells(), bench.pass_budget_s()
+    )
     print(
         json.dumps(
             {
                 "metric": "duckdb_oracle_suite_wall_clock",
-                "value": total,
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "errors": errors,
             }
         )
     )
